@@ -1391,7 +1391,7 @@ def main() -> None:
             "bench_variants": variants,
         }
         # Phase 2c — bucketed-at-rest facts (DEPLOY.md's prescribed 100 TB
-        # layout, promoted from scripts/bucketed_facts_ab.py per VERDICT r4):
+        # layout, promoted from the BASELINE.md round-4 A/B per VERDICT r4):
         # lineitem/orders live as external bucketed tables clustered+sorted
         # on the order key, and io.load_table reads them via the
         # spark.graft.bucketedTables conf — the SAME registered plan

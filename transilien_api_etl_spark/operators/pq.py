@@ -109,8 +109,8 @@ def pq_train(
         # per row evaluated boxed; measured ~0.54 s/iteration at a mere
         # 2 000×64 and multi-second at the 66 k-row twin sample). Codes
         # verified IDENTICAL to the fold on every driver SF and the twin
-        # bound (scripts/r12_pq_arrow_parity.py), so the per-(m,cid,d)
-        # means — rounded to ROUND_DP — are unchanged.
+        # bound (BASELINE.md "Round-12 session 1: wall decompositions"),
+        # so the per-(m,cid,d) means — rounded to ROUND_DP — are unchanged.
         enc = pq_codes_arrow(
             df, books, sub_dim, id_col=id_col, vec_col="v", keep_vec=True
         )
@@ -176,7 +176,8 @@ def pq_codes_arrow(
     minimum, and codebooks are cid-sorted); only the float summation order
     differs (pairwise matmul vs sequential), which round 12 verified
     produces IDENTICAL codes and therefore identical Lloyd updates on
-    every driver SF and the scale cache (scripts/r12_pq_arrow_parity.py;
+    every driver SF and the scale cache (BASELINE.md "Round-12 session 1:
+    wall decompositions"; tests/test_scale_arrow_paths.py pins the parity;
     the driver's oracle MATCH re-proves it end-to-end), so this kernel is
     now the single encode path at every corpus size. ``keep_vec=True``
     additionally passes the raw vector column through (the train loop

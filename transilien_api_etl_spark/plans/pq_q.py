@@ -99,9 +99,9 @@ def _encoded_codes(spark: SparkSession, sf_dir: str, vec_bound: int | None = Non
     # M·k named_struct argmin evaluated interpreted — measured 1.5 s for
     # 2 000 rows at sf0.1 vs 0.3 s through the kernel, and the codes are
     # verified IDENTICAL on every driver SF and at the twin bound
-    # (scripts/r12_pq_arrow_parity.py; the driver's oracle MATCH re-proves
-    # it end-to-end). Training-sample gating (sample_mod) keeps its
-    # threshold unchanged.
+    # (BASELINE.md "Round-12 session 1: wall decompositions"; the driver's
+    # oracle MATCH re-proves it end-to-end). Training-sample gating
+    # (sample_mod) keeps its threshold unchanged.
     enc = pq_codes_arrow(emb, books, SUB_DIM, id_col="vec_id", vec_col="embedding")
     return emb, books, enc
 

@@ -93,8 +93,8 @@ def _derived_k(n: int) -> int:
 # derived k = n/4000 = 32, so the Arrow assignment kernel AND the
 # per-cluster gram prune, i.e. the genuine scale path — completes on
 # DuckDB too: the twin oracle below MEASURED 17.1 s at 128 k vs the >60 s
-# cap the full-corpus unrolled-CTE chain hits at 1 M
-# (scripts/bench_twin_probe.py). On driver testdata vec_id < KEY_STRIDE,
+# cap the full-corpus unrolled-CTE chain hits at 1 M (BASELINE.md,
+# "Round-9 validation runs 2-3"). On driver testdata vec_id < KEY_STRIDE,
 # so the filter is a no-op and fn ≡ bench_fn (tests/test_bench_variants).
 #
 # Round 12 (VERDICT r11 task 1): 64 → 48 replicas (96 k vectors). The
@@ -235,7 +235,7 @@ def _semdedup_survivors_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     "k-schedule subquery in _K_EXPR_SQL), same Arrow-kernel-vs-CTE "
     "recipe — so the ratio is a measured number instead of the capped "
     "lower bound the full-corpus quadratic NOT EXISTS chain forced "
-    "(oracle measured 17.1 s at 128 k; scripts/bench_twin_probe.py).",
+    "(oracle measured 17.1 s at 128 k; BASELINE.md round-9 runs 2-3).",
     tags=("vectors", "dedup", "clustering"),
     bench=True,
     bench_heavy=True,

@@ -21,9 +21,9 @@ The transport is pluggable: ``endpoint`` points at a directory holding one
 container — no network). A production deployment swaps `_fetch` for the
 HTTP GET; nothing else changes.
 
-Rows come out string-typed in RAW_PASSAGE_SCHEMA;
-``sources/realtime.normalize_passages`` stays the typing/normalization
-stage, shared with the mapInPandas path.
+Rows come out string-typed in RAW_PASSAGE_SCHEMA. The XML walk
+(``sources/realtime.parse_payload``) and the typing/normalization stage
+(``normalize_passages``) are both shared with the mapInPandas path.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from transilien_api_etl_spark.sources.realtime import RAW_PASSAGE_SCHEMA
+from transilien_api_etl_spark.sources.realtime import RAW_PASSAGE_SCHEMA, parse_payload
 
 CHUNK_SIZE = 20  # stations per partition, mirrors the reference's batching
 
@@ -56,30 +56,6 @@ def _fetch(endpoint: str, station: str) -> str | None:
             return f.read()
     except OSError:
         return None
-
-
-def _parse(station: str, payload: str | None) -> Iterator[tuple]:
-    """XML → tuples in RAW_PASSAGE_SCHEMA order; bad payloads yield nothing
-    (the reference logs-and-skips bad station responses)."""
-    import xml.etree.ElementTree as ET
-
-    if payload is None:
-        return
-    try:
-        root = ET.fromstring(payload)
-    except ET.ParseError:
-        return
-    for train in root.iter("train"):
-        date_el = train.find("date")
-        yield (
-            station,
-            train.findtext("num"),
-            train.findtext("miss"),
-            train.findtext("term"),
-            None if date_el is None else date_el.text,
-            None if date_el is None else date_el.get("mode"),
-            train.findtext("etat"),
-        )
 
 
 class _StationChunk(InputPartition):
@@ -114,7 +90,7 @@ class TransilienXmlReader(DataSourceReader):
 
     def read(self, partition: _StationChunk) -> Iterator[tuple]:
         for station in partition.stations:
-            yield from _parse(station, _fetch(partition.endpoint, station))
+            yield from parse_payload(station, _fetch(partition.endpoint, station))
 
 
 class TransilienXmlStreamReader(DataSourceStreamReader):
@@ -173,7 +149,7 @@ class TransilienXmlStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _StationChunk) -> Iterator[tuple]:
         for station in partition.stations:
-            yield from _parse(station, _fetch(partition.endpoint, station))
+            yield from parse_payload(station, _fetch(partition.endpoint, station))
 
     def commit(self, end: dict) -> None:
         pass

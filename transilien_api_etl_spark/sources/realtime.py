@@ -20,6 +20,7 @@ in this module. Normalization is whole-stage-codegen'd column work.
 
 from __future__ import annotations
 
+import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
 import pandas as pd
@@ -44,43 +45,48 @@ RAW_PASSAGE_SCHEMA = T.StructType(
 )
 
 
+def parse_payload(station: str, payload: str | None) -> Iterator[tuple]:
+    """One station poll's XML → tuples in RAW_PASSAGE_SCHEMA order. A
+    missing or malformed payload yields nothing (the reference logs-and-skips
+    bad station responses the same way). Shared by ``parse_passages`` and
+    the ``transilien_xml`` DataSource readers."""
+    if payload is None:
+        return
+    try:
+        root = ET.fromstring(payload)
+    except ET.ParseError:
+        return
+    for train in root.iter("train"):
+        date_el = train.find("date")
+        yield (
+            station,
+            train.findtext("num"),
+            train.findtext("miss"),
+            train.findtext("term"),
+            None if date_el is None else date_el.text,
+            None if date_el is None else date_el.get("mode"),
+            train.findtext("etat"),
+        )
+
+
 def parse_passages(raw: DataFrame, station_col: str = "station", xml_col: str = "xml") -> DataFrame:
     """Explode raw per-station XML payloads into one row per ``<train>``.
 
     ``mapInPandas`` keeps parsing Arrow-batched and executor-side; a payload
-    that fails to parse yields zero rows (the reference logs-and-skips bad
-    station responses the same way).
+    that fails to parse yields zero rows (see :func:`parse_payload`).
     """
-    out_schema = RAW_PASSAGE_SCHEMA
+    columns = RAW_PASSAGE_SCHEMA.fieldNames()
 
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import xml.etree.ElementTree as ET
-
         for pdf in batches:
-            rows: list[dict] = []
-            for station, payload in zip(pdf[station_col], pdf[xml_col]):
-                if payload is None:
-                    continue
-                try:
-                    root = ET.fromstring(payload)
-                except ET.ParseError:
-                    continue
-                for train in root.iter("train"):
-                    date_el = train.find("date")
-                    rows.append(
-                        {
-                            "station": station,
-                            "num": train.findtext("num"),
-                            "miss": train.findtext("miss"),
-                            "term": train.findtext("term"),
-                            "date_text": None if date_el is None else date_el.text,
-                            "mode": None if date_el is None else date_el.get("mode"),
-                            "etat": train.findtext("etat"),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            rows = [
+                row
+                for station, payload in zip(pdf[station_col], pdf[xml_col])
+                for row in parse_payload(station, payload)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return raw.mapInPandas(parse_batch, schema=out_schema)
+    return raw.mapInPandas(parse_batch, schema=RAW_PASSAGE_SCHEMA)
 
 
 def normalize_passages(passages: DataFrame, cutoff_hours: int = 3) -> DataFrame:
