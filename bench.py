@@ -1369,7 +1369,11 @@ def main() -> None:
                 "warm AND first timed rep exceed the slow cutoff — the "
                 "rep-list length in *_reps shows which), "
                 "heavy=median_of_warm_reps, "
-                "paired rows=steady3 over per-rep spark_i/duck_i quotients, "
+                "paired rows=steady3 over per-rep spark_i/duck_i quotients "
+                f"({fast_tier_reps()} reps; storm-exposed rows "
+                f"{','.join(sorted(STORM_EXPOSED_ROWS))} take "
+                f"+{EXTRA_STORM_REPS} alternating reps unless sentinel "
+                f"drift >= {DRIFT_GATE}, this run +{storm_extra_reps()}), "
                 "oracle_heavy blowouts past the very-slow cutoff=single "
                 "measured warm-run rep (raw_reps length 1 shows which; "
                 "bias direction inflates the DuckDB denominator, bounded "

@@ -8,6 +8,7 @@ import os
 import tempfile
 
 import pytest
+from pyspark import StorageLevel
 
 from transilien_api_etl_spark.sources import lakehouse as lh
 
@@ -360,3 +361,78 @@ def test_streaming_replay_mark_commits_atomically_with_data(spark):
     assert max(lh.load_snapshot(table).batches) == 1
     sink(b0, 1)  # still a replay after compact: no-op
     assert lh.read_table(spark, table).count() == 3
+
+
+def _tapped(spark, rows, schema):
+    """``rows`` as a DataFrame whose every evaluation adds the number of
+    rows it produced to the returned accumulator."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    return spark.createDataFrame(rows, schema).mapInPandas(tap, schema), acc
+
+
+@pytest.mark.parametrize(
+    "keys",
+    [range(200, 300), range(0, 100)],
+    ids=["insert_only", "touches_files"],
+)
+def test_merge_evaluates_source_once(spark, table, keys):
+    src, acc = _tapped(
+        spark, [(i, "m", float(i)) for i in keys], "id long, name string, v double"
+    )
+    lh.merge_into(spark, table, src)
+    assert acc.value == len(keys)
+    assert not src.is_cached
+    assert src.storageLevel == StorageLevel.NONE
+    got = {r["id"]: r["name"] for r in lh.read_table(spark, table).collect()}
+    assert len(got) == len(set(range(100)) | set(keys))
+    assert all(got[i] == "m" for i in keys)
+
+
+def test_merge_leaves_caller_cached_source_cached(spark, table):
+    src, acc = _tapped(
+        spark, [(i, "c", 0.0) for i in range(10)], "id long, name string, v double"
+    )
+    src.cache()
+    try:
+        lh.merge_into(spark, table, src)
+        assert src.is_cached
+        assert src.storageLevel != StorageLevel.NONE
+        src.count()
+        assert acc.value == 10  # the second action still read the cache
+    finally:
+        src.unpersist()
+
+
+def test_delete_emptying_touched_files_publishes_untouched_only(spark, table):
+    before = lh.load_snapshot(table)
+    untouched = [e for e in before.files if e["min_key"] >= 50]
+    src = spark.createDataFrame(
+        [(i, None, 0.0, True) for i in range(50)],
+        "id long, name string, v double, is_delete boolean",
+    )
+    after = lh.merge_into(spark, table, src, delete_col="is_delete")
+    assert list(after.files) == untouched
+    # The zero-row staged batch was discarded: only the batches the two
+    # committed snapshots reference remain under data/.
+    live_dirs = {e["path"].split(os.sep)[1] for e in before.files}
+    assert set(os.listdir(os.path.join(table, "data"))) == live_dirs
+    assert sorted(r["id"] for r in lh.read_table(spark, table).collect()) == list(
+        range(50, 100)
+    )
+
+
+def test_merge_reports_null_key_pair_as_duplicate(spark):
+    table = tempfile.mkdtemp(prefix="lakehouse-nulldup-")
+    df = spark.createDataFrame([(1, "a", 1.0)], "id long, name string, v double")
+    lh.create_table(spark, table, df, ["id"])
+    src = spark.createDataFrame(
+        [(None, "x", 0.0), (None, "y", 0.0)], "id long, name string, v double"
+    )
+    with pytest.raises(ValueError, match="duplicate keys"):
+        lh.merge_into(spark, table, src)

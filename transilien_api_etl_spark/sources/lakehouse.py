@@ -47,6 +47,7 @@ import uuid
 from dataclasses import dataclass, field
 from decimal import Decimal
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,8 +143,9 @@ def load_snapshot(table: str, version: int | None = None) -> Snapshot:
 
 def _write_data_files(df: DataFrame, table: str, key_cols: list[str]) -> list[dict]:
     """Write df as immutable parquet under data/ and return file entries
-    with per-file min/max key stats (read back from parquet footers via
-    Spark, so stats cost one metadata-only scan, not a data pass)."""
+    with per-file min/max key stats (read back from the written parquet
+    via Spark: a column-pruned scan of the key column grouped by file, not
+    a footer-only read)."""
     batch = uuid.uuid4().hex
     out_dir = os.path.join(table, _DATA, batch)
     df.write.parquet(out_dir)
@@ -194,9 +196,10 @@ def _write_data_files(df: DataFrame, table: str, key_cols: list[str]) -> list[di
 
 
 def _discard_staged(table: str, entries: list[dict]) -> None:
-    """Best-effort removal of a losing writer's staged batch dirs so a
-    lost commit CAS doesn't orphan data files forever (vacuum's orphan
-    sweep is the backstop for crashes that skip this)."""
+    """Best-effort removal of staged batch dirs that will not be published
+    (a losing writer's, or a merge result that came out empty) so they
+    don't orphan data files forever (vacuum's orphan sweep is the backstop
+    for crashes that skip this)."""
     for d in {os.path.dirname(os.path.join(table, e["path"])) for e in entries}:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -331,16 +334,32 @@ def merge_into(
     records a streaming batch id inside the committed manifest, atomically
     with the data (the exactly-once hook ``stream_merge_sink`` relies on).
     An empty source is a no-op returning the current snapshot.
+
+    The source is materialised once (``MEMORY_AND_DISK``) and released
+    before return: the key checks and the write read the same rows, and a
+    retry after ``ConcurrentWriteError`` reuses them. This pays most when
+    the source's lineage is costly to recompute, as for a streaming
+    micro-batch that scans files and parses XML in Python, which is then
+    parsed once, not once per action; a plain file-scan source pays for one
+    copy of all its columns where the key check alone would read only the
+    key. A source the caller already cached is used as-is and left cached.
     """
-    for attempt in range(max_retries + 1):
-        snap = load_snapshot(table)
-        try:
-            return _merge_once(spark, table, source, snap, delete_col, txn_batch_id)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            time.sleep(0.05 * (attempt + 1))
-    raise AssertionError("unreachable")
+    owned = source.storageLevel == StorageLevel.NONE
+    if owned:
+        source = source.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        for attempt in range(max_retries + 1):
+            snap = load_snapshot(table)
+            try:
+                return _merge_once(spark, table, source, snap, delete_col, txn_batch_id)
+            except ConcurrentWriteError:
+                if attempt == max_retries:
+                    raise
+                time.sleep(0.05 * (attempt + 1))
+        raise AssertionError("unreachable")
+    finally:
+        if owned:
+            source.unpersist()
 
 
 def _snapshot_columns(spark: SparkSession, table: str, snap: Snapshot) -> list[str]:
@@ -370,31 +389,38 @@ def _merge_once(
     key_cols = list(snap.key_cols)
     k = key_cols[0]
 
-    dup = source.groupBy(*key_cols).count().where(F.col("count") > 1).limit(1).count()
-    if dup:
+    # One aggregate over the per-key counts checks the source and drives
+    # file-level pruning: only files whose key range can hold a source key
+    # get rewritten. groupBy puts NULL keys in one group, so two NULL-key
+    # rows count as a duplicate. NULL keys are rejected too — a NULL merge
+    # key can never equi-join a target row, so letting it through would
+    # insert a never-matchable, never-updatable row on EVERY merge replay
+    # (key-unique corruption).
+    bounds = (
+        source.groupBy(*key_cols)
+        .count()
+        .agg(
+            F.min(k).alias("lo"),
+            F.max(k).alias("hi"),
+            F.sum("count").alias("n_rows"),
+            F.sum(F.when(F.col(k).isNotNull(), F.col("count"))).alias("n_keyed"),
+            F.max("count").alias("max_per_key"),
+        )
+        .collect()[0]
+    )
+    if (bounds["max_per_key"] or 0) > 1:
         raise ValueError("merge source carries duplicate keys; dedup it first")
-
-    # File-level pruning: only files whose key range can hold a source key
-    # get rewritten. One tiny agg on the source drives the split; the same
-    # agg also counts NULL keys — a NULL merge key can never equi-join a
-    # target row, so letting it through would insert a never-matchable,
-    # never-updatable row on EVERY merge replay (key-unique corruption).
-    bounds = source.agg(
-        F.min(k).alias("lo"),
-        F.max(k).alias("hi"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(k).alias("n_keyed"),
-    ).collect()[0]
+    n_rows, n_keyed = bounds["n_rows"] or 0, bounds["n_keyed"] or 0
     lo, hi = bounds["lo"], bounds["hi"]
     if lo is None or hi is None:
         # Empty source (or all-null keys): nothing can match or insert.
         # Routine under foreachBatch, which delivers empty micro-batches.
-        if source.head(1):
+        if n_rows:
             raise ValueError("merge source keys are all NULL")
         return snap
-    if bounds["n_keyed"] < bounds["n_rows"]:
+    if n_keyed < n_rows:
         raise ValueError(
-            f"merge source contains {bounds['n_rows'] - bounds['n_keyed']} "
+            f"merge source contains {n_rows - n_keyed} "
             f"NULL-key row(s) in {k}; a NULL key can never match and would "
             "accumulate as an unupdatable duplicate — filter or fix upstream"
         )
@@ -463,13 +489,14 @@ def _merge_once(
             ],
         )
 
-    # Write even an empty merge result when no untouched files remain: the
-    # zero-row parquet file carries the table schema, so a fully-deleted
-    # table stays readable (0 rows) instead of publishing a file-less,
-    # schema-less manifest.
-    if merged.head(1) or not untouched:
-        new_entries = _write_data_files(merged, table, key_cols)
-    else:
+    # Always write: probing the result for emptiness first would evaluate
+    # it once more. An empty result is staged as one zero-row parquet file,
+    # which is kept only when no untouched file remains — it carries the
+    # table schema, so a fully-deleted table stays readable (0 rows)
+    # instead of publishing a file-less, schema-less manifest.
+    new_entries = _write_data_files(merged, table, key_cols)
+    if untouched and all(e["rows"] == 0 for e in new_entries):
+        _discard_staged(table, new_entries)
         new_entries = []
     hw = max(
         [b for b in (*snap.batches, txn_batch_id) if b is not None],
